@@ -12,8 +12,10 @@ classify READ→sources / WRITE→targets, and derive
 * ``mermaid_*()`` — text diagrams (``model_collection.py:315-358``).
 
 ``run()`` executes the layers: models inside a layer are submitted from
-driver threads so Spark's scheduler interleaves their jobs (the
-reference delegated this to an external executor).
+driver threads, so their jobs run side by side under Spark's default
+FIFO scheduler — the earliest-submitted job's tasks take free cores
+first, later jobs fill the cores it leaves idle (the reference delegated
+this to an external executor).
 """
 
 from __future__ import annotations

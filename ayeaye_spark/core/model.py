@@ -11,8 +11,10 @@
 
   - ``distribution="threads"`` (default): subtasks are submitted
     concurrently from driver threads — each subtask composes DataFrame
-    ops, so Spark's scheduler (FAIR pools) interleaves the actual cluster
-    work.  This replaces the reference's LocalProcessPool: the *data* is
+    ops, and Spark's scheduler runs their jobs side by side.  Sessions
+    use Spark's default FIFO mode: the earliest-submitted job's tasks
+    take free cores first, later jobs fill the cores it leaves idle.
+    This replaces the reference's LocalProcessPool: the *data* is
     what's distributed, the task list is just concurrent job submission.
   - ``distribution="rdd"``: for pure-Python subtasks (no SparkSession
     use), ship the task list through ``sc.parallelize(...).map`` with the
@@ -35,6 +37,7 @@ from pyspark.sql import SparkSession
 
 from .dataset import Connect, DatasetHandle
 from .resolver import connector_resolver
+from .session import default_parallelism
 
 
 class LockingMode(Enum):
@@ -439,6 +442,4 @@ class RuntimeKnowledge:
 
     @property
     def max_concurrent_tasks(self) -> int:
-        import os
-
-        return (os.cpu_count() or 4) * self.cpu_task_ratio
+        return default_parallelism() * self.cpu_task_ratio

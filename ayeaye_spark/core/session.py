@@ -6,6 +6,11 @@ pandas-UDF slow path, UTC session timezone (oracle comparability), and
 shuffle partitions sized to the local core count instead of Spark's
 default 200.  On a real cluster these remain correct starting points —
 AQE re-plans partition counts from runtime statistics.
+
+On ``local[...]`` masters the Python workers run under the engine's own
+daemon (:mod:`ayeaye_spark.core.pyworker`), which removes most of the
+fixed cost of every Python task, and find ``ayeaye_spark`` on their path
+however the driver was launched.
 """
 
 from __future__ import annotations
@@ -14,9 +19,37 @@ import os
 
 from pyspark.sql import SparkSession
 
+PYWORKER_MODULE = "ayeaye_spark.core.pyworker"
+WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+#: the directory that contains the ``ayeaye_spark`` package
+PACKAGE_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def _with_python_worker_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
+    """``extra_conf`` plus the Python-worker settings of a ``local[...]``
+    master: the engine's daemon (unless the caller names another), and
+    the package root first on the workers' ``PYTHONPATH``, ahead of any
+    value the caller passes, so the daemon and UDFs defined in
+    ``ayeaye_spark`` import even when only the driver's ``sys.path`` knows
+    the package.  Other masters keep Spark's daemon: their executors may
+    lack the package."""
+    if not (master == "local" or master.startswith("local[")):
+        return extra_conf
+    rest = [
+        p for p in extra_conf.get(WORKER_PYTHONPATH, "").split(os.pathsep)
+        if p and p != PACKAGE_ROOT
+    ]
+    return {
+        "spark.python.daemon.module": PYWORKER_MODULE,
+        **extra_conf,
+        WORKER_PYTHONPATH: os.pathsep.join([PACKAGE_ROOT, *rest]),
+    }
 
 
 # Guide-§9 production starting configuration for a REAL cluster at the
@@ -49,9 +82,11 @@ def get_spark(
     if profile not in ("local", "cluster"):
         raise ValueError(f"profile must be 'local' or 'cluster', got {profile!r}")
     cpus = default_parallelism()
+    master = master or f"local[{cpus}]"
+    extra_conf = _with_python_worker_conf(master, extra_conf or {})
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -75,7 +110,7 @@ def get_spark(
     if profile == "cluster":
         for k, v in CLUSTER_PROFILE_CONF.items():
             builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -377,8 +377,15 @@ class ParquetConnector(_ColumnarLayoutWriter, DataConnector):
     _format = "parquet"
 
     def read(self, spark: SparkSession) -> DataFrame:
+        """A declared ``schema=`` skips Spark's footer-inference job;
+        partition columns of a ``partition_by`` layout are still
+        discovered from the directory names."""
         self._require_read()
-        return spark.read.parquet(spark_path(self.url))
+        reader = spark.read
+        schema = self.connector_kwargs.get("schema")
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(spark_path(self.url))
 
 
 class OrcConnector(_ColumnarLayoutWriter, DataConnector):

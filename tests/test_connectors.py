@@ -4,6 +4,7 @@ per-connector golden tests, SURVEY §5)."""
 import gzip
 import json
 import os
+import uuid
 
 import pytest
 
@@ -144,6 +145,44 @@ class TestOtherFormats:
         out = connector_for(f"parquet://{tmp_path}/t.parquet", access=AccessMode.READWRITE)
         out.write(df)
         assert out.read(spark).count() == 2
+
+    @staticmethod
+    def _read_jobs(spark, connector):
+        """(DataFrame, jobs Spark ran while building it)."""
+        sc = spark.sparkContext
+        group = f"parquet_read_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "parquet read")
+        try:
+            df = connector.read(spark)
+        finally:
+            sc.setJobGroup(None, None)
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_parquet_declared_schema_skips_inference(self, spark, tmp_path):
+        df = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "name"])
+        connector_for(f"parquet://{tmp_path}/t.parquet", access=AccessMode.WRITE).write(df)
+        _, inferred_jobs = self._read_jobs(spark, connector_for(f"parquet://{tmp_path}/t.parquet"))
+        got, declared_jobs = self._read_jobs(
+            spark, connector_for(f"parquet://{tmp_path}/t.parquet", schema="id BIGINT, name STRING")
+        )
+        assert inferred_jobs >= 1
+        assert declared_jobs == 0
+        assert got.dtypes == [("id", "bigint"), ("name", "string")]
+        assert sorted(map(tuple, got.collect())) == [(1, "a"), (2, "b")]
+
+    def test_parquet_declared_schema_keeps_partition_columns(self, spark, tmp_path):
+        df = spark.createDataFrame([(1, "a", "x"), (2, "b", "y"), (3, "c", "x")],
+                                   ["id", "name", "grp"])
+        connector_for(
+            f"parquet://{tmp_path}/p.parquet", access=AccessMode.WRITE, partition_by=["grp"]
+        ).write(df)
+        got, jobs = self._read_jobs(
+            spark, connector_for(f"parquet://{tmp_path}/p.parquet", schema="id BIGINT, name STRING")
+        )
+        assert jobs == 0
+        assert got.columns == ["id", "name", "grp"]
+        assert sorted(map(tuple, got.collect())) == [(1, "a", "x"), (2, "b", "y"), (3, "c", "x")]
+        assert got.where("grp = 'x'").count() == 2
 
     def test_orc_roundtrip(self, spark, tmp_path):
         df = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "name"])

@@ -170,6 +170,15 @@ class TestPartitionedModel:
         assert m.go(spark)
         assert sorted(collected) == ["p0", "p1", "p2"]
 
+    def test_max_concurrent_tasks_follows_session_cores(self, monkeypatch):
+        from ayeaye_spark.core.model import RuntimeKnowledge
+
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+        runtime = RuntimeKnowledge()
+        assert runtime.max_concurrent_tasks == 3 * RuntimeKnowledge.cpu_task_ratio
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "1")
+        assert runtime.max_concurrent_tasks == RuntimeKnowledge.cpu_task_ratio
+
 
 class TestModelCollection:
     def _three_models(self, tmp_path):
